@@ -1,0 +1,1 @@
+"""Crawl-round benchmark: see README.md in this directory."""
