@@ -8,8 +8,6 @@
   quantization path must be exercised by a NON-regular graph (the
   derived 2-regular fixture keeps ranks uniform, hiding any mismatch)
   (golden.py:382).
-- plans/round._parse_mem must accept Spark's two-letter memory suffixes
-  ('4gb', '512mb') that JavaUtils.byteStringAsBytes allows (round.py:57).
 - similarity.connected_components must fail loudly when a component's
   diameter exceeds max_iters instead of silently returning split
   clusters (similarity.py:1161).
@@ -25,20 +23,6 @@ from collections import Counter, defaultdict
 import pytest
 
 sys.path.insert(0, ".")
-
-from webscraper_spark.plans.round import _parse_mem
-
-
-def test_parse_mem_suffix_forms():
-    assert _parse_mem("512m") == 512 << 20
-    assert _parse_mem("512mb") == 512 << 20
-    assert _parse_mem("4g") == 4 << 30
-    assert _parse_mem("4GB") == 4 << 30
-    assert _parse_mem("1t") == 1 << 40
-    assert _parse_mem("1tb") == 1 << 40
-    assert _parse_mem("1024") == 1024
-    assert _parse_mem("512b") == 512
-    assert _parse_mem("1.5g") == int(1.5 * (1 << 30))
 
 
 def test_connected_components_raises_when_unconverged(spark):

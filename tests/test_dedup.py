@@ -1,16 +1,12 @@
-"""Seen-set layers: exact join, Bloom (no false negatives), cuckoo."""
+"""Seen-set operators: exact joins, Bloom probe (no false negatives)."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
-from hypothesis import given, settings, strategies as st
-from pyspark.sql import functions as F
 
 from webscraper_spark.operators.dedup import (
     BloomSeenSet,
     BloomShard,
-    CuckooFilter,
     anti_join_seen,
     bloom_filtered_new,
     dedup_latest,
@@ -59,85 +55,3 @@ def test_dedup_latest(spark):
     )
     rows = {r["k"]: r["v"] for r in dedup_latest(df, ["k"], "ts").collect()}
     assert rows == {1: "new", 2: "only"}
-
-
-def test_cuckoo_insert_contains_delete():
-    cf = CuckooFilter(capacity=5000)
-    keys = list(range(-2000, 2000, 3))
-    for k in keys:
-        assert cf.insert(k)
-    assert all(cf.contains(k) for k in keys)
-    # deletions — the capability Bloom lacks
-    for k in keys[:100]:
-        assert cf.delete(k)
-    misses = sum(cf.contains(k) for k in keys[:100])
-    assert misses < 5  # rare fp collisions may remain, never many
-    assert all(cf.contains(k) for k in keys[100:])
-
-
-def test_cuckoo_roundtrip_and_determinism():
-    a, b = CuckooFilter(1000), CuckooFilter(1000)
-    for k in range(500):
-        a.insert(k)
-        b.insert(k)
-    assert a.to_bytes() == b.to_bytes()  # rebuilds are reproducible
-    c = CuckooFilter.from_bytes(a.to_bytes(), a.n_buckets)
-    assert all(c.contains(k) for k in range(500))
-
-
-@given(st.sets(st.integers(-(2**63), 2**63 - 1), min_size=0, max_size=300))
-@settings(max_examples=50, deadline=None)
-def test_cuckoo_property_membership(keys):
-    cf = CuckooFilter(capacity=max(64, len(keys) * 2))
-    for k in keys:
-        cf.insert(k)
-    assert all(cf.contains(k) for k in keys)
-
-
-def test_sharded_bloom_probe_equals_broadcast_and_exact(spark):
-    """BloomShardStore (distributed, never-collected shards) must produce
-    exactly the anti-join's output, like the broadcast probe — the 10^10-
-    key memory path is a plan change, not a semantics change."""
-    from webscraper_spark.operators.dedup import BloomSeenSet, BloomShardStore
-
-    seen = spark.range(0, 20000, 2).select(
-        (F.col("id") * 2654435761 % 2**31).alias("url_hash")
-    )
-    cand = spark.range(0, 30000, 3).select(
-        (F.col("id") * 2654435761 % 2**31).alias("url_hash"),
-        F.concat(F.lit("u"), F.col("id")).alias("url"),
-    )
-    exact = {r.url_hash for r in anti_join_seen(cand, seen).collect()}
-    store = BloomShardStore.build(seen, n_shards=8)
-    sharded = {
-        r.url_hash for r in bloom_filtered_new(cand, seen, store).collect()
-    }
-    bcast = {
-        r.url_hash
-        for r in bloom_filtered_new(
-            cand, seen, BloomSeenSet.build(seen, n_shards=8)
-        ).collect()
-    }
-    store.unpersist()
-    assert sharded == exact == bcast
-
-
-def test_round_sharded_bloom_equals_broadcast(spark, sdfs, tmp_path):
-    """run_round with bloom_mode='sharded' commits byte-identical state to
-    the broadcast-bloom round."""
-    from webscraper_spark.plans.round import run_crawl
-    from webscraper_spark.sources.tables import TableStore
-
-    outs = {}
-    for mode in ("broadcast", "sharded"):
-        store = TableStore(spark, str(tmp_path / f"store_{mode}"))
-        run_crawl(store, sdfs["pages"], sdfs["seeds"], sdfs["hosts"],
-                  n_rounds=2, per_host_budget=3, bloom_mode=mode)
-        outs[mode] = {
-            t: sorted(
-                tuple(r) for r in store.read_delta(t, up_to=2)
-                .drop("elapsed_sec", "scheduled_ts").collect()
-            )
-            for t in ("seen", "fetched", "frontier")
-        }
-    assert outs["broadcast"] == outs["sharded"]

@@ -1,11 +1,10 @@
-"""Forced re-crawl invalidation (seen-set deletions + cuckoo fast path)."""
+"""Forced re-crawl invalidation (seen-set deletions)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from webscraper_spark.operators.dedup import CuckooSeenSet
 from webscraper_spark.plans.round import prepare_pages, run_crawl, run_round
 from webscraper_spark.sources.tables import TableStore
 
@@ -106,102 +105,3 @@ def test_recrawl_refetches_and_preserves_membership(spark, sdfs, crawled_store):
     }
     assert not (target_hashes & fetched4)
     pages_latest.unpersist()
-
-
-def test_bulk_recrawl_builds_distributed_no_driver_loop(spark):
-    """100k-key bulk recrawl: keys fold into the cogrouped build as
-    ``extra`` (never collected to the driver) and must all read as seen —
-    including keys whose deletes would otherwise evict them, and keys not
-    present in the seen table at all."""
-    import numpy as np
-
-    n = 100_000
-    seen = spark.range(n).select(
-        F.col("id").alias("url_hash"), F.lit(1).alias("discovered_round")
-    )
-    # delete every 3rd key at round 5 (newer than discovery)
-    deletes = (
-        spark.range(0, n, 3)
-        .select(F.col("id").alias("url_hash"), F.lit(5).alias("deleted_round"))
-    )
-    # bulk recrawl: every 3rd key (deleted ones) plus 10k brand-new keys
-    recrawl = spark.range(0, n + 10_000, 3).select(F.col("id").alias("url_hash"))
-    cs = CuckooSeenSet.build(seen, deletes, n_shards=8, extra=recrawl)
-    # probe vectorized, executor-side
-    probe = cs.might_contain_udf(spark)
-    got = (
-        spark.range(n + 10_000)
-        .select(F.col("id").alias("url_hash"), probe(F.col("id")).alias("hit"))
-        .filter(~F.col("hit"))
-        .select("url_hash")
-        .collect()
-    )
-    missing = np.array([r.url_hash for r in got], dtype=np.int64)
-    # live membership: all of seen except deleted-and-not-recrawled; plus
-    # every recrawl key (recrawl keys are all ≡0 mod 3 here, so deletes
-    # never win); plus nothing else is *required* (false positives OK)
-    live_missing = missing[(missing < n) | (missing % 3 == 0)]
-    assert live_missing.size == 0, live_missing[:10]
-
-
-def test_cuckoo_vectorized_matches_scalar():
-    """insert_many/contains_many are bit-identical twins of the scalar
-    insert/contains (same hash stream, same placement)."""
-    import numpy as np
-
-    from webscraper_spark.operators.dedup import CuckooFilter
-
-    rng = np.random.default_rng(7)
-    keys = rng.integers(-(2**62), 2**62, 5000, dtype=np.int64)
-    a = CuckooFilter(capacity=6000)
-    b = CuckooFilter(capacity=6000)
-    ok_vec = a.insert_many(keys)
-    ok_scalar = np.array([b.insert(int(k)) for k in keys])
-    assert (ok_vec == ok_scalar).all()
-    assert (a.table == b.table).all()
-    other = rng.integers(-(2**62), 2**62, 5000, dtype=np.int64)
-    probe = np.concatenate([keys[:100], other])
-    got = a.contains_many(probe)
-    want = np.array([b.contains(int(k)) for k in probe])
-    assert (got == want).all()
-    assert got[:100].all()  # no false negatives
-
-
-def test_cuckoo_insert_many_reports_full():
-    """A full filter reports drops (callers rebuild at 2× capacity —
-    silent drops would be probe false negatives)."""
-    import numpy as np
-
-    from webscraper_spark.operators.dedup import CuckooFilter
-
-    cf = CuckooFilter(capacity=16)
-    keys = np.arange(10_000, dtype=np.int64)
-    ok = cf.insert_many(keys)
-    assert not ok.all() and ok.any()
-    inserted = keys[ok]
-    assert cf.contains_many(inserted).all()  # everything accepted is findable
-
-
-def test_cuckoo_seen_set_matches_exact_semantics(spark):
-    seen = spark.createDataFrame(
-        [(k, 1) for k in range(1000)] + [(5, 7), (6, 7)],  # 5,6 re-discovered @7
-        "url_hash long, discovered_round int",
-    )
-    deletes = spark.createDataFrame(
-        [(5, 4), (6, 9), (7, 3)],  # 5 deleted@4 then re-added@7; 6 deleted@9 (final); 7 deleted@3
-        "url_hash long, deleted_round int",
-    )
-    cs = CuckooSeenSet.build(seen, deletes, n_shards=8)
-    probe = cs.might_contain_udf(spark)
-    keys = spark.range(1200).select(F.col("id").alias("url_hash"))
-    got = {
-        r.url_hash: r.hit
-        for r in keys.select("url_hash", probe(F.col("url_hash")).alias("hit")).collect()
-    }
-    assert got[5] is True       # re-discovery after deletion restores
-    assert got[6] is False      # deletion newer than last discovery
-    assert got[7] is False      # deleted, never re-added
-    # no false negatives over the live membership
-    live = set(range(1000)) - {6, 7}
-    missing = [k for k in live if not got[k]]
-    assert not missing

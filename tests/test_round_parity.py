@@ -2,7 +2,7 @@
 
 THE correctness gate from BASELINE.json north_star: identical per-host
 crawl ordering, identical URL-seen membership, byte-identical extracted
-text per url — engine (distributed, salted, Bloom-layered) vs reference
+text per url — engine (distributed, salted, exact anti-join) vs reference
 semantics (sequential loop), same seed list + politeness budget.
 """
 
@@ -42,7 +42,7 @@ def sim_run(corpus):
 
 
 # wall-clock + engine-internal keys, excluded from reference parity
-_TIMING_KEYS = {"elapsed_sec", "eta_sec", "bloom_mode_used"}
+_TIMING_KEYS = {"elapsed_sec", "eta_sec"}
 
 
 def test_lineage_counts_match(engine_run, sim_run):
@@ -119,17 +119,6 @@ def test_resume_equals_uninterrupted(spark, sdfs, tmp_path_factory, engine_run):
     fa = store1.read_snapshot("frontier")
     fb = store2.read_snapshot("frontier")
     assert sorted(map(tuple, fa.collect())) == sorted(map(tuple, fb.collect()))
-
-
-def test_no_bloom_equals_bloom(spark, sdfs, tmp_path_factory, engine_run):
-    """The Bloom fast path must not change results (cache, not truth)."""
-    store2 = TableStore(spark, str(tmp_path_factory.mktemp("crawl_nobloom")))
-    run_crawl(store2, sdfs["pages"], sdfs["seeds"], sdfs["hosts"],
-              n_rounds=N_ROUNDS, per_host_budget=BUDGET, use_bloom=False)
-    store1, _ = engine_run
-    a = {r["url_hash"] for r in store1.read_delta("seen").collect()}
-    b = {r["url_hash"] for r in store2.read_delta("seen").collect()}
-    assert a == b
 
 
 def test_two_fresh_crawls_are_byte_identical(spark, sdfs, tmp_path):

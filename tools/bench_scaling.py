@@ -9,7 +9,7 @@ is cached per process, so cores must differ per process).
 What is measured: **steady-state crawl rounds** over a ~1.2M-URL
 frontier — politeness scheduling (salted ranking window), fetch join,
 Arrow extraction of ~300k pages/round, outlink canonicalization
-(~1.8M hrefs/round), Bloom+exact seen anti-join, and the per-round
+(~1.8M hrefs/round), the exact seen anti-join, and the per-round
 table commits. One-time costs (corpus generation, session startup,
 pages canonicalization, round-0 init) are excluded: at 10^10 scale they
 are amortized across thousands of rounds, and including them would
@@ -132,9 +132,8 @@ def gen_corpus_parquet(out_dir: str, n_urls: int = N_URLS,
     spark.stop()
 
 
-def run_one(cores: int, corpus_dir: str, bloom_mode: str = "auto",
-            aqe_skew: bool = True, n_salt: int = 1,
-            budget: int = BUDGET) -> dict:
+def run_one(cores: int, corpus_dir: str, aqe_skew: bool = True,
+            n_salt: int = 1, budget: int = BUDGET) -> dict:
     from webscraper_spark.plans.round import init_crawl, prepare_pages, run_round
     from webscraper_spark.session import get_spark
     from webscraper_spark.sources.tables import TableStore
@@ -166,7 +165,7 @@ def run_one(cores: int, corpus_dir: str, bloom_mode: str = "auto",
         t0 = time.time()
         lineages = [
             run_round(store, pages_latest, r, per_host_budget=budget,
-                      use_bloom=True, bloom_mode=bloom_mode, n_salt=n_salt)
+                      n_salt=n_salt)
             for r in range(1, ROUNDS + 1)
         ]
         wall = time.time() - t0
@@ -302,8 +301,6 @@ if __name__ == "__main__":
     ap = argparse.ArgumentParser()
     ap.add_argument("--cores", type=int)
     ap.add_argument("--corpus")
-    ap.add_argument("--bloom-mode", default="auto",
-                    help="auto|broadcast|sharded (probe-topology A/B)")
     ap.add_argument("--compare", action="store_true")
     ap.add_argument("--levels", default="2,4,8",
                     help="comma-separated parallelism levels for --compare")
@@ -322,7 +319,7 @@ if __name__ == "__main__":
         skew_compare(cores=args.cores or 8, repeat=args.repeat)
     else:
         print(json.dumps(run_one(
-            args.cores, args.corpus, args.bloom_mode,
+            args.cores, args.corpus,
             aqe_skew=args.aqe_skew == "on", n_salt=args.n_salt,
             budget=args.budget,
         )))

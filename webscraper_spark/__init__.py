@@ -10,8 +10,8 @@ Layout
 ``functions/``   scalar kernels: URL canonicalization, xxhash64, string
                  coercion (convalue / clean_rating / normalize_string),
                  HTML text + outlink extraction (Arrow-vectorized).
-``operators/``   relational operators: seen-set dedup (exact anti-join +
-                 sharded Bloom + cuckoo fallback), politeness scheduler
+``operators/``   relational operators: seen-set dedup (exact anti-join;
+                 broadcast Bloom pre-probe for queries), politeness scheduler
                  (per-host ranking window + budget + skew salting),
                  geo categorization (multi-strategy fallback join),
                  similarity (minhash-LSH / simhash / ngram-jaccard / ANN),

@@ -63,7 +63,6 @@ def cmd_crawl(args) -> int:
             n_rounds=args.rounds, per_host_budget=args.budget,
             settle_seconds=args.settle_seconds,
             ledger_compact_every=args.ledger_compact_every,
-            use_bloom=not args.no_bloom,
         )
     else:
         if args.drop_dir is not None:  # streaming twin → round-job handoff
@@ -89,7 +88,6 @@ def cmd_crawl(args) -> int:
         lineages = run_crawl(
             store, pages, seeds, hosts,
             n_rounds=args.rounds, per_host_budget=args.budget,
-            use_bloom=not args.no_bloom,
         )
     for i, l in enumerate(lineages, start=store.last_committed_round() - len(lineages) + 1):
         print(json.dumps({"round": i, **l}))
@@ -289,7 +287,6 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument("--store", required=True)
     c.add_argument("--rounds", type=int, default=1)
     c.add_argument("--budget", type=int, default=5)
-    c.add_argument("--no-bloom", action="store_true")
     c.set_defaults(fn=cmd_crawl)
 
     m = sub.add_parser("match", help="normalized-key matched/unmatched partition")

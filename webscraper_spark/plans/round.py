@@ -6,7 +6,7 @@ Dataflow per round K::
     frontier ──schedule (robots + politeness window + budget)──▶ scheduled
     scheduled ⋈ pages (newest-wins)  ──▶ hits / misses
     hits ──extract UDF──▶ fetched rows (text, title, fields)
-    hits ──explode(outlinks) ─canon─ dedupe ─bloom+anti-join seen──▶ new
+    hits ──explode(outlinks) ─canon─ dedupe ─anti-join seen──▶ new
     commit: fetched+=K, seen+=new, frontier=next snapshot,
             hosts=advanced clocks, metrics+=per-shard lineage
 
@@ -18,10 +18,11 @@ the reference's analog is JSON-checkpoint short-circuiting,
 Scale shape: the only wide operations are (a) the scheduler's salted
 ranking window, (b) the fetch equi-join on (url_hash, url) — at cluster
 scale both sides bucketed by url_hash so this is co-partitioned, (c) the
-seen anti-join, which the Bloom pre-probe shrinks to the maybe-seen
-slice, and (d) one groupBy for metrics. ``pages.html`` is only read
-behind the scheduled-join (column pruning keeps it out of every other
-scan).
+exact seen anti-join on url_hash — at cluster scale the seen table is
+bucketed by url_hash, so only the candidates shuffle
+(``tests/test_bucketing.py``) — and (d) one groupBy for metrics.
+``pages.html`` is only read behind the scheduled-join (column pruning
+keeps it out of every other scan).
 """
 
 from __future__ import annotations
@@ -34,15 +35,7 @@ from pyspark.sql import functions as F
 
 from ..functions.canon import canonicalize_href_udf, with_canonical
 from ..functions.extract import extract_udf
-from ..operators.dedup import (
-    BloomSeenSet,
-    BloomShardStore,
-    CuckooSeenSet,
-    anti_join_seen,
-    bloom_filtered_new,
-    choose_bloom_mode,
-    dedup_latest,
-)
+from ..operators.dedup import anti_join_seen, dedup_latest
 from ..operators.hoststats import throttle_admission
 from ..operators.schedule import advance_host_clocks, schedule_round
 from ..schemas import FETCHED, FRONTIER, SEEN
@@ -52,19 +45,6 @@ BASE_ROUND_EPOCH = datetime(2025, 7, 25, 0, 0, 0)
 ROUND_INTERVAL = timedelta(hours=1)
 RETRY_BACKOFF = timedelta(minutes=30)
 N_METRIC_SHARDS = 32
-
-
-def _parse_mem(s: str) -> int:
-    """Parse a Spark memory string ('512m', '4gb', '1t', '512b', bare
-    bytes) — accepts both the one- and two-letter suffix forms that
-    Spark's JavaUtils.byteStringAsBytes allows."""
-    s = s.strip().lower()
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    if s.endswith("b") and len(s) > 1:
-        s = s[:-1]  # '4gb' → '4g', '512b' → '512'
-    if s and s[-1] in units:
-        return int(float(s[:-1]) * units[s[-1]])
-    return int(s)
 
 
 def round_clock(round_no: int) -> datetime:
@@ -140,12 +120,8 @@ def run_round(
     round_no: int,
     per_host_budget: int = 5,
     max_retries: int = 2,
-    use_bloom: bool = True,
     n_salt: int = 1,
-    bloom_shards: int = 32,
     recrawl: DataFrame | None = None,
-    bloom_mode: str = "auto",
-    executor_mem_bytes: int | None = None,
     host_reputation: DataFrame | None = None,
     extra_lineage: dict | None = None,
 ) -> dict:
@@ -155,15 +131,7 @@ def run_round(
     ``recrawl``: optional DataFrame with a ``url`` column — forced
     re-crawl invalidations. Those urls are deleted from the effective
     seen-set (recorded in the ``seen_deletes`` delta), re-enqueued at top
-    priority, and re-added to ``seen`` as discovered this round. With
-    deletions present the fast membership path switches from Bloom to the
-    deletion-capable cuckoo filters.
-
-    ``bloom_mode``: "auto" (default) sizes the filter from the seen count
-    and flips broadcast→sharded past ¼ of executor memory
-    (``executor_mem_bytes`` overrides the ``spark.executor.memory`` conf);
-    "broadcast"/"sharded" force a topology (both output-equivalent,
-    tested).
+    priority, and re-added to ``seen`` as discovered this round.
 
     ``host_reputation``: optional :func:`..operators.hoststats.host_stats`
     table — discovered URLs from hosts over the dup-rate / under the
@@ -277,38 +245,7 @@ def run_round(
     seen_admit = seen_eff.select("url_hash")
     if recrawl_rows is not None:
         seen_admit = seen_admit.unionByName(recrawl_rows.select("url_hash"))
-    fast = None
-    if use_bloom and bloom_mode == "auto":
-        # automatic flip point (was a caller decision): size the filter
-        # from the seen count and go sharded once a broadcast copy would
-        # eat >¼ of executor memory. One cheap single-column count; the
-        # 10^10-key design point always lands sharded here.
-        mem = executor_mem_bytes
-        if mem is None:
-            mem = _parse_mem(
-                pages_latest.sparkSession.conf.get("spark.executor.memory", "1g")
-            )
-        bloom_mode = choose_bloom_mode(seen_admit.count(), mem)
-    if use_bloom:
-        if deletes is not None or recrawl_rows is not None:
-            # deletions in play → deletion-capable cuckoo filters; this
-            # round's recrawl keys fold into the distributed cogroup
-            # build with an always-wins discovery round (they must still
-            # read as "seen" for admission — re-added below). No driver
-            # collect: a bulk recrawl of millions of URLs builds at the
-            # same cost as the seen-set itself, and the build's checked
-            # inserts rebuild full shards at doubled capacity instead of
-            # silently dropping keys.
-            fast = CuckooSeenSet.build(
-                seen, deletes, n_shards=bloom_shards, extra=recrawl_rows
-            )
-        elif bloom_mode == "sharded":
-            # 10^10-key path: shards never collected, probe is a
-            # shard-cogrouped join (per-shard memory, one narrow shuffle)
-            fast = BloomShardStore.build(seen_admit, n_shards=bloom_shards)
-        else:
-            fast = BloomSeenSet.build(seen_admit, n_shards=bloom_shards)
-    admitted = bloom_filtered_new(candidates, seen_admit, fast)
+    admitted = anti_join_seen(candidates, seen_admit)
     if host_reputation is not None:
         # host-reputation gate on admission: candidates from duplicate-
         # farm / junk hosts never enter the frontier, low-English hosts
@@ -446,11 +383,6 @@ def run_round(
         "missed": int(agg["m"] or 0),
         "new_urls": int(agg["n"] or 0),
         "elapsed_sec": elapsed_sec,
-        "bloom_mode_used": (
-            "cuckoo" if isinstance(fast, CuckooSeenSet)
-            else "sharded" if isinstance(fast, BloomShardStore)
-            else "broadcast" if fast is not None else "none"
-        ),
     }
     if recrawl_rows is not None:
         lineage["recrawled"] = recrawl_rows.count()
@@ -461,8 +393,6 @@ def run_round(
     new_urls.unpersist()
     misses.unpersist()
     metrics.unpersist()
-    if isinstance(fast, BloomShardStore):
-        fast.unpersist()
     if recrawl_rows is not None:
         recrawl_rows.unpersist()
     return lineage

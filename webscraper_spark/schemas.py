@@ -41,8 +41,8 @@ FRONTIER = T.StructType(
 )
 
 # --- seen: ground-truth URL-seen membership (reference analog: the Python
-# set of normalized names, crunchbase_matching.py:57-62). Bloom/cuckoo
-# filters are caches over this table, never the truth.
+# set of normalized names, crunchbase_matching.py:57-62). Membership is an
+# exact anti-join on url_hash; a Bloom filter is only ever a cache over it.
 SEEN = T.StructType(
     [
         T.StructField("url_hash", T.LongType(), False),
