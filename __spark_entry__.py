@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from webscraper_spark.functions.canon import canonicalize_href_udf, canonicalize_url_udf
+from webscraper_spark.functions.canon import canonicalize_url_udf
 from webscraper_spark.functions.extract import extract_udf
 from webscraper_spark.functions.robots import parse_robots_udf
 from webscraper_spark.functions.textfns import (
@@ -41,7 +41,6 @@ from webscraper_spark.functions.textfns import (
 from webscraper_spark.operators.categorize import geo_pipeline, threshold_filter
 from webscraper_spark.operators.dedup import (
     BloomSeenSet,
-    anti_join_seen,
     bloom_filtered_new,
     dedup_latest,
 )
@@ -65,6 +64,7 @@ from webscraper_spark.operators.textstats import (
     token_count_col,
 )
 from webscraper_spark.operators.topk import topk_per_group
+from webscraper_spark.plans.round import discover_new, fetch_and_extract
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -169,25 +169,13 @@ def _derived_corpus(spark: SparkSession, sf_dir: str):
 
 
 def _crawl_round(spark: SparkSession, sf_dir: str, budget: int = 3) -> DataFrame:
-    """One full crawl round over the derived corpus: politeness schedule →
-    fetch join → Arrow extraction → outlink discovery → seen anti-join.
+    """One full crawl round over the derived corpus, run by the production
+    round's own stages (``plans/round.py``): politeness schedule → fetch
+    join → Arrow extraction → outlink discovery → seen anti-join.
     Non-SQL-expressible (stateful scheduling + Python-kernel extraction):
     rows-only check."""
     pages, frontier, hosts = _derived_corpus(spark, sf_dir)
-    seen = frontier.select("url_hash")
-    scheduled = schedule_round(
-        frontier, hosts, per_host_budget=budget, round_start_ts=ROUND_START
-    )
-    hits = scheduled.join(
-        pages.select("url_hash", "url", "warc_ts", "html"), on=["url_hash", "url"]
-    )
-    extracted = hits.withColumn("ex", extract_udf("html")).select(
-        "url", "host", F.col("host_seq").cast("long").alias("host_seq"),
-        "scheduled_ts",
-        F.col("ex.title").alias("title"),
-        F.col("ex.text").alias("text"),
-        F.col("ex.outlinks").alias("outlinks"),
-    )
+    _, _, extracted = fetch_and_extract(frontier, hosts, pages, ROUND_START, budget)
     # materialize the round's fetched+extracted rows ONCE (budget×hosts
     # rows — tiny by construction): both the output branch and the
     # discovery-totals branch consume `extracted`, and without the cut
@@ -197,20 +185,13 @@ def _crawl_round(spark: SparkSession, sf_dir: str, budget: int = 3) -> DataFrame
     # write, so the cut mirrors the real pipeline. Fresh per invocation —
     # nothing persists across bench runs.
     extracted = extracted.localCheckpoint(eager=True)
-    links = (
-        extracted.select(F.col("url").alias("src"), F.explode("outlinks").alias("href"))
-        .withColumn("link", canonicalize_href_udf(F.col("href"), F.col("src")))
-        .filter(F.col("link").isNotNull())
-        .select(F.col("link").alias("url"))
-        .distinct()
-        .withColumn("url_hash", F.xxhash64("url"))
-    )
-    new_urls = anti_join_seen(links, seen)
+    new_urls = discover_new(extracted, frontier.select("url_hash"))
     # discovery total rides as an aggregated broadcast column so the whole
     # round is ONE job (no driver-side count action)
     totals = F.broadcast(new_urls.agg(F.count("*").alias("new_urls_total")))
     return extracted.crossJoin(totals).select(
-        "url", "host", "host_seq", "scheduled_ts", "title",
+        "url", "host", F.col("host_seq").cast("long").alias("host_seq"),
+        "scheduled_ts", "title",
         F.size("outlinks").cast("long").alias("n_outlinks"),
         F.col("new_urls_total").cast("long").alias("new_urls_total"),
     )

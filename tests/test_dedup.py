@@ -10,7 +10,6 @@ from webscraper_spark.operators.dedup import (
     anti_join_seen,
     bloom_filtered_new,
     dedup_latest,
-    semi_join_seen,
 )
 
 
@@ -36,7 +35,6 @@ def test_exact_joins(spark):
     seen = spark.createDataFrame([(i,) for i in range(100)], "url_hash: long")
     cand = spark.createDataFrame([(i,) for i in range(50, 150)], "url_hash: long")
     assert anti_join_seen(cand, seen).count() == 50
-    assert semi_join_seen(cand, seen).count() == 50
 
 
 def test_bloom_filtered_new_equals_exact(spark):

@@ -56,6 +56,31 @@ def test_golden_crawl_round_matches_spark(spark):
     assert spark_rows == golden_rows
 
 
+def test_flagship_crawl_round_equals_run_round(spark, tmp_path):
+    """The flagship query and the production round run the same stages:
+    round 1 of ``run_round`` over the derived corpus commits exactly the
+    flagship's fetched rows and discovery count, so the golden oracle
+    above checks ``run_round`` too."""
+    import __spark_entry__ as entry
+    from webscraper_spark.plans.round import init_crawl, prepare_pages, run_round
+    from webscraper_spark.sources.tables import TableStore
+
+    pages, frontier, hosts = entry._derived_corpus(spark, SF)
+    store = TableStore(spark, str(tmp_path / "crawl"))
+    init_crawl(store, frontier.select("url", "priority"), hosts)
+    lineage = run_round(store, prepare_pages(pages), 1, per_host_budget=3)
+
+    cols = ["url", "host", "host_seq", "scheduled_ts", "title", "n_outlinks"]
+    committed = sorted(
+        tuple(r) for r in store.read_round("fetched", 1)
+        .filter(F.col("fetch_status") == "ok").select(cols).collect()
+    )
+    flagship = entry.q_crawl_round(spark, SF).collect()
+    assert committed == sorted(tuple(r[c] for c in cols) for r in flagship)
+    assert len(committed) > 0
+    assert {r.new_urls_total for r in flagship} == {lineage["new_urls"]}
+
+
 def test_golden_minhash_fast_matches_spark(spark):
     from webscraper_spark.operators.similarity import lsh_candidate_pairs_pandas
 

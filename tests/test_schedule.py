@@ -107,33 +107,3 @@ def test_advance_host_clocks(spark, sdfs):
             assert (ts - base).total_seconds() * 1000 == n * d
         else:
             assert ts == before[host]
-
-
-def test_schedule_shuffle_hosts_path_equals_broadcast(spark, sdfs):
-    """The 10^8-host code path (broadcast_hosts=False, co-partitioned
-    shuffle join) must produce exactly the broadcast plan's schedule."""
-    from datetime import datetime
-
-    from webscraper_spark.functions.canon import with_canonical
-    from webscraper_spark.operators.schedule import schedule_round
-    from pyspark.sql import functions as F
-
-    frontier = (
-        with_canonical(sdfs["seeds"]).dropDuplicates(["url_hash"]).select(
-            "url_hash", "url", "host",
-            F.col("priority").cast("int").alias("priority"),
-            F.lit(0).alias("discovered_round"),
-            F.lit(0).alias("retry_count"),
-            F.lit(None).cast("timestamp").alias("next_fetch_ts"),
-        )
-    )
-    ts = datetime(2025, 8, 1)
-    a = schedule_round(frontier, sdfs["hosts"], 3, round_start_ts=ts, broadcast_hosts=True)
-    b = schedule_round(frontier, sdfs["hosts"], 3, round_start_ts=ts, broadcast_hosts=False)
-    cols = ["url_hash", "host", "host_seq", "scheduled_ts"]
-    # (exceptAll over the two plans trips a Catalyst attribute-binding
-    # INTERNAL_ERROR because both sides share the hosts lineage — compare
-    # materialized sets instead)
-    sa = {tuple(r) for r in a.select(cols).collect()}
-    sb = {tuple(r) for r in b.select(cols).collect()}
-    assert sa == sb and len(sa) > 0

@@ -107,10 +107,11 @@ def _read_doc_ids(sf_dir: str) -> list[int]:
 
 
 def golden_crawl_round(sf_dir: str, budget: int = 3) -> list[dict]:
-    """Sequential twin of ``__spark_entry__._crawl_round``: derived-corpus
-    rules (url/host/outlinks from doc_id), politeness ranking ordered by
-    (priority, xxhash64(url)), per-host budget, title from the synthesized
-    html, outlink discovery anti-joined against the frontier-as-seen."""
+    """Sequential twin of the production round's stages (``plans/round.py``
+    ``fetch_and_extract`` + ``discover_new``, run by ``_crawl_round``) over
+    the derived corpus (url/host/outlinks from doc_id): politeness ranking
+    by (priority, xxhash64(url)), per-host budget, title from the html,
+    outlink discovery anti-joined against the frontier-as-seen."""
     doc_ids = _read_doc_ids(sf_dir)
     n = len(doc_ids)
 

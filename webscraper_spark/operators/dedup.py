@@ -203,11 +203,6 @@ def anti_join_seen(candidates: DataFrame, seen: DataFrame,
     return candidates.join(seen.select(key_col), on=key_col, how="left_anti")
 
 
-def semi_join_seen(candidates: DataFrame, seen: DataFrame,
-                   key_col: str = "url_hash") -> DataFrame:
-    return candidates.join(seen.select(key_col), on=key_col, how="left_semi")
-
-
 def bloom_filtered_new(
     candidates: DataFrame,
     seen: DataFrame,

@@ -57,7 +57,6 @@ def schedule_round(
     per_host_budget: int,
     round_start_ts=None,
     n_salt: int = 1,
-    broadcast_hosts: bool = True,
 ) -> DataFrame:
     """Admit + order + timestamp this round's fetches.
 
@@ -65,16 +64,13 @@ def schedule_round(
     sequence), ``scheduled_ts``, ``delay_ms``. Unknown hosts get default
     politeness (allowed, DEFAULT_DELAY_MS, clock = round start).
 
-    Scale notes: the frontier→hosts join is a shuffle-on-host equi-join
-    (hosts is ~|distinct hosts| rows — broadcastable when it fits, and
-    Catalyst/AQE picks that up from stats); ranking is the salted top-k;
-    everything downstream sees ≤ budget rows per host.
+    Scale notes: the frontier→hosts join broadcasts hosts (~|distinct
+    hosts| rows); at 10^8 hosts the hint must go so Spark plans a shuffle
+    join co-partitioned on host. Ranking is the salted top-k; everything
+    downstream sees ≤ budget rows per host.
     """
     hd = hosts_with_rules(hosts)
-    # hosts is |distinct hosts| rows — broadcast while it fits (the common
-    # case); at 10^8-host scale flip to a shuffle join co-partitioned on
-    # host with the frontier's hash partitioning.
-    joined = frontier.join(F.broadcast(hd) if broadcast_hosts else hd, on="host", how="left")
+    joined = frontier.join(F.broadcast(hd), on="host", how="left")
 
     # backoff gate: rows whose next_fetch_ts is in the logical future wait
     if round_start_ts is not None:

@@ -1,5 +1,6 @@
-"""The crawl round job — one Spark job per round (EP2's discover +
-fetch+extract stages fused; SURVEY §3, §7.1 step 6).
+"""The crawl round (EP2's discover + fetch+extract stages fused; SURVEY
+§3, §7.1 step 6). A round runs 27 Spark jobs, as crawlbench's traced
+run counts them.
 
 Dataflow per round K::
 
@@ -10,14 +11,18 @@ Dataflow per round K::
     commit: fetched+=K, seen+=new, frontier=next snapshot,
             hosts=advanced clocks, metrics+=per-shard lineage
 
+The first four lines are the lazy stages :func:`fetch_and_extract` and
+:func:`discover_new`, shared with the flagship ``crawl_round`` query.
+
 Every state change lands in one `TableStore.commit_round` — a crashed
 round K is invisible and idempotently re-runnable (C8 resume semantics;
 the reference's analog is JSON-checkpoint short-circuiting,
 ``LinkedIn-Updated-Script.py:188-194``).
 
 Scale shape: the only wide operations are (a) the scheduler's salted
-ranking window, (b) the fetch equi-join on (url_hash, url) — at cluster
-scale both sides bucketed by url_hash so this is co-partitioned, (c) the
+ranking window, (b) the fetch equi-join on url_hash (url equality
+guards it against hash collisions) — at cluster scale both sides
+bucketed by url_hash so this is co-partitioned, (c) the
 exact seen anti-join on url_hash — at cluster scale the seen table is
 bucketed by url_hash, so only the candidates shuffle
 (``tests/test_bucketing.py``) — and (d) one groupBy for metrics.
@@ -86,15 +91,84 @@ def init_crawl(
             F.lit(None).cast("timestamp").alias("next_fetch_ts"),
         )
     )
-    frontier = f
-    store.write("frontier", frontier, 0)
-    store.write(
-        "seen",
-        frontier.select("url_hash", "url", "host", "discovered_round"),
-        0,
-    )
+    store.write("frontier", f, 0)
+    store.write("seen", f.select("url_hash", "url", "host", "discovered_round"), 0)
     store.write("hosts", hosts, 0)
-    store.commit_round(0, lineage={"seeds": frontier.count()})
+    store.commit_round(0, lineage={"seeds": f.count()})
+
+
+def fetch_and_extract(
+    frontier: DataFrame, hosts: DataFrame, pages_latest: DataFrame,
+    start_ts: datetime, per_host_budget: int, n_salt: int = 1,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Schedule, fetch and extract one round. Returns ``(scheduled,
+    misses, extracted)``: the politeness schedule, the scheduled rows
+    with no page to fetch, and the fetched pages' extracted fields
+    (plus ``host_seq``, ``scheduled_ts``, ``priority`` and the page's
+    ``__html_len``). Lazy: nothing is persisted, the caller decides."""
+    # 1. politeness scheduling (robots + ranking window + budget)
+    scheduled = schedule_round(
+        frontier, hosts, per_host_budget, round_start_ts=start_ts, n_salt=n_salt
+    )
+
+    # 2. "fetch" = equi-join against the pages table on url_hash ALONE so
+    # the join co-partitions with pages_latest's url_hash partitioning
+    # (html never re-shuffles; only the narrow scheduled side moves).
+    # pages_latest is unique per url_hash (newest-wins dedup), so the join
+    # yields at most one match; the post-join url equality demotes 64-bit
+    # hash collisions (possible at 10^10 keys) to misses instead of
+    # fetching the wrong page.
+    page_cols = pages_latest.select(
+        F.col("url_hash"), F.col("url").alias("__page_url"),
+        F.col("warc_ts"), F.col("html"), F.col("lang"),
+    )
+    fetched_join = (
+        scheduled.join(page_cols, on="url_hash", how="left")
+        .withColumn(
+            "html",
+            F.when(F.col("__page_url") == F.col("url"), F.col("html")),
+        )
+        .drop("__page_url")
+    )
+    hits = fetched_join.filter(F.col("html").isNotNull())
+    misses = fetched_join.filter(F.col("html").isNull())
+
+    # 3. extraction (one Arrow batch at a time)
+    extracted = hits.withColumn("ex", extract_udf("html")).select(
+        "url_hash", "url", "host", "host_seq", "scheduled_ts", "warc_ts",
+        F.col("lang"),
+        F.col("ex.title").alias("title"),
+        F.col("ex.text").alias("text"),
+        F.col("ex.outlinks").alias("outlinks"),
+        F.length(F.col("html")).alias("__html_len"),
+        F.col("priority"),
+    )
+    return scheduled, misses, extracted
+
+
+def discover_new(extracted: DataFrame, seen_keys: DataFrame) -> DataFrame:
+    """Outlink discovery: explode ``extracted.outlinks`` → canonicalize
+    against the source url → one row per url carrying its sources' min
+    priority (``__pprio``) → anti-join on ``url_hash`` against
+    ``seen_keys``. Returns ``url, __pprio, host, url_hash``. Lazy."""
+    links = (
+        extracted.select(
+            F.col("url").alias("src_url"),
+            F.col("priority").alias("src_priority"),
+            F.explode_outer("outlinks").alias("href"),
+        )
+        .filter(F.col("href").isNotNull())
+        .withColumn("__canon", canonicalize_href_udf(F.col("href"), F.col("src_url")))
+        .filter(F.col("__canon").isNotNull())
+        .select(F.col("__canon").alias("url"), "src_priority")
+    )
+    candidates = (
+        links.groupBy("url")
+        .agg(F.min("src_priority").alias("__pprio"))
+        .withColumn("host", F.parse_url(F.col("url"), F.lit("HOST")))
+        .withColumn("url_hash", F.xxhash64(F.col("url")))
+    )
+    return anti_join_seen(candidates, seen_keys)
 
 
 def _merge_extra_lineage(lineage: dict, extra_lineage: "dict | None") -> dict:
@@ -180,72 +254,23 @@ def run_round(
 
     start_ts = round_clock(round_no)
 
-    # 1. politeness scheduling (robots + ranking window + budget)
-    scheduled = schedule_round(
-        frontier, hosts, per_host_budget, round_start_ts=start_ts, n_salt=n_salt
-    ).persist()
-
-    # 2. "fetch" = equi-join against the pages table on url_hash ALONE so
-    # the join co-partitions with pages_latest's url_hash partitioning
-    # (html never re-shuffles; only the narrow scheduled side moves).
-    # pages_latest is unique per url_hash (newest-wins dedup), so the join
-    # yields at most one match; the post-join url equality demotes 64-bit
-    # hash collisions (possible at 10^10 keys) to misses instead of
-    # fetching the wrong page.
-    page_cols = pages_latest.select(
-        F.col("url_hash"), F.col("url").alias("__page_url"),
-        F.col("warc_ts"), F.col("html"), F.col("lang"),
-    )
-    fetched_join = (
-        scheduled.join(page_cols, on="url_hash", how="left")
-        .withColumn(
-            "html",
-            F.when(F.col("__page_url") == F.col("url"), F.col("html")),
+    # 1-3. schedule → fetch → extract, cached for their several consumers
+    # (misses carry no html — tiny; caching them avoids re-running the
+    # fetch join for the retry/metrics/write consumers)
+    scheduled, misses, extracted = (
+        df.persist()
+        for df in fetch_and_extract(
+            frontier, hosts, pages_latest, start_ts, per_host_budget, n_salt
         )
-        .drop("__page_url")
     )
 
-    hits = fetched_join.filter(F.col("html").isNotNull())
-    # misses carry no html (left-join nulls) — tiny; persisting avoids
-    # re-running the fetch join for the retry/metrics/write consumers
-    misses = fetched_join.filter(F.col("html").isNull()).persist()
-
-    # 3. extraction (one Arrow batch at a time)
-    extracted = hits.withColumn("ex", extract_udf("html")).select(
-        "url_hash", "url", "host", "host_seq", "scheduled_ts", "warc_ts",
-        F.col("lang"),
-        F.col("ex.title").alias("title"),
-        F.col("ex.text").alias("text"),
-        F.col("ex.outlinks").alias("outlinks"),
-        F.length(F.col("html")).alias("__html_len"),
-        F.col("priority"),
-    ).persist()
-
-    # 4. outlink discovery → canonicalize → in-round dedupe → seen anti-join
-    links = (
-        extracted.select(
-            F.col("url").alias("src_url"),
-            F.col("priority").alias("src_priority"),
-            F.explode_outer("outlinks").alias("href"),
-        )
-        .filter(F.col("href").isNotNull())
-        .withColumn("__canon", canonicalize_href_udf(F.col("href"), F.col("src_url")))
-        .filter(F.col("__canon").isNotNull())
-        .select(F.col("__canon").alias("url"), "src_priority")
-    )
-    candidates = (
-        links.groupBy("url")
-        .agg(F.min("src_priority").alias("__pprio"))
-        .withColumn("host", F.parse_url(F.col("url"), F.lit("HOST")))
-        .withColumn("url_hash", F.xxhash64(F.col("url")))
-    )
-    # admission membership = effective seen (post-deletions) plus this
-    # round's recrawl keys (they are re-added below, so candidates must
-    # not re-admit them)
+    # 4. outlink discovery against the admission membership = effective
+    # seen (post-deletions) plus this round's recrawl keys (they are
+    # re-added below, so candidates must not re-admit them)
     seen_admit = seen_eff.select("url_hash")
     if recrawl_rows is not None:
         seen_admit = seen_admit.unionByName(recrawl_rows.select("url_hash"))
-    admitted = anti_join_seen(candidates, seen_admit)
+    admitted = discover_new(extracted, seen_admit)
     if host_reputation is not None:
         # host-reputation gate on admission: candidates from duplicate-
         # farm / junk hosts never enter the frontier, low-English hosts
@@ -319,7 +344,7 @@ def run_round(
         .withColumn("round", F.lit(round_no))
     )
     new_per_shard = (
-        new_urls.withColumn("shard", F.pmod(F.xxhash64("host"), F.lit(N_METRIC_SHARDS)).cast("int"))
+        new_urls.withColumn("shard", shard)
         .groupBy("shard")
         .agg(F.count("*").alias("new_urls"))
     )

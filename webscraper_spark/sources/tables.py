@@ -192,9 +192,6 @@ class TableStore:
             return None
         return self.spark.read.parquet(path)
 
-    def destroy(self) -> None:
-        shutil.rmtree(self.root, ignore_errors=True)
-
 
 def merge_upsert(
     target: DataFrame, updates: DataFrame, key_cols: list[str]
