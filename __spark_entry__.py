@@ -192,7 +192,7 @@ def _crawl_round(spark: SparkSession, sf_dir: str, budget: int = 3) -> DataFrame
     return extracted.crossJoin(totals).select(
         "url", "host", F.col("host_seq").cast("long").alias("host_seq"),
         "scheduled_ts", "title",
-        F.size("outlinks").cast("long").alias("n_outlinks"),
+        F.col("n_outlinks").cast("long").alias("n_outlinks"),
         F.col("new_urls_total").cast("long").alias("new_urls_total"),
     )
 

@@ -4,9 +4,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from webscraper_spark.functions.canon import canonicalize_url
 from webscraper_spark.functions.extract import (
     extract_fields,
     extract_outlinks,
+    extract_round,
+    extract_round_udf,
     extract_text,
     extract_udf,
 )
@@ -198,3 +201,59 @@ def test_unclosed_tags_recovered():
     from webscraper_spark.functions.extract import extract_text
 
     assert extract_text(h) == "first second third"
+
+
+_ADVERSARIAL_HREFS = [
+    "javascript:void(0)", "mailto:a@b.example", "data:text/plain,x", "#frag",
+    "//other.example/x", "https://h.example:99999/p", "http://h.example:x/p",
+    "/abs/path", "sibling", "sub/dir/", "  /spaced  ", "HTTPS://UPPER.EXAMPLE/P",
+    "https://h.example:443/q?b=2&a=1#f", "ftp://h.example/f", "",
+]
+_ROUND_PAGES = [
+    ("https://h.example/a/b",
+     "<html><head><title>T</title></head><body>"
+     + "".join(f'<a href="{h}">{i}</a>' for i, h in enumerate(_ADVERSARIAL_HREFS))
+     + "</body></html>"),
+    ("http://h.example:8080/", "<p>no links</p>"),
+    ("https://h.example/x", None),  # fails to parse
+]
+
+
+def _want_outlinks(html, url):
+    return [c for h in extract_outlinks(html)
+            if (c := canonicalize_url(h, base=url)) is not None]
+
+
+def test_round_kernel_equals_extract_then_canonicalize(corpus):
+    pages = [(r["url"], r["html"]) for _, r in corpus["pages"].iterrows()]
+    for url, html in _ROUND_PAGES + pages:
+        got = extract_round(html, url)
+        fields = extract_fields(html)
+        assert (got["title"], got["text"]) == (fields["title"], fields["text"])
+        if fields["outlinks"] is None:
+            assert got["outlinks"] is None and got["n_outlinks"] is None
+            continue
+        assert got["outlinks"] == _want_outlinks(html, url), url
+        assert got["n_outlinks"] == len(extract_outlinks(html))
+    url, html = _ROUND_PAGES[0]
+    adversarial = extract_round(html, url)
+    assert adversarial["n_outlinks"] == len(_ADVERSARIAL_HREFS)
+    assert "https://upper.example/P" in adversarial["outlinks"]
+    assert "https://h.example/a/sibling" in adversarial["outlinks"]
+
+
+def test_round_udf_n_outlinks_matches_size_of_raw_hrefs(spark):
+    df = spark.createDataFrame(_ROUND_PAGES, "url string, html string")
+    rows = df.select(
+        "url",
+        extract_round_udf("html", "url").alias("ex"),
+        F.size(extract_udf("html").outlinks).alias("raw_size"),
+    ).collect()
+    html_of = dict(_ROUND_PAGES)
+    assert sorted(r["url"] for r in rows) == sorted(html_of)
+    for r in rows:
+        html = html_of[r["url"]]
+        assert r["ex"]["n_outlinks"] == r["raw_size"]
+        want = None if html is None else _want_outlinks(html, r["url"])
+        assert r["ex"]["outlinks"] == want
+    assert any(r["raw_size"] is None for r in rows)

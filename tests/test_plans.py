@@ -15,6 +15,7 @@ from __future__ import annotations
 import sys
 
 import pytest
+from pyspark.sql import functions as F
 
 sys.path.insert(0, ".")
 
@@ -50,3 +51,58 @@ def test_gated_ngram_plan_shape(spark):
     # the exploded shared-shingle self-join would show as a join on a
     # generated 'h' column coming from two Generate(explode) children
     assert plan.count("Generate explode") <= 2  # LSH banding only
+
+
+def _udf_nodes(df, udf: str) -> int:
+    return _plan(df).count(f"ArrowEvalPython [{udf}(")
+
+
+def test_round_kernels_evaluate_once_per_row(spark, sdfs):
+    """Each crawl-round kernel plans exactly one ArrowEvalPython node: an
+    ``isNotNull`` filter split from its projection would run the kernel
+    twice per row, and outlink discovery runs in the JVM alone."""
+    from datetime import datetime
+
+    from webscraper_spark.functions.canon import with_canonical
+    from webscraper_spark.plans.round import discover_new, fetch_and_extract
+
+    pages = with_canonical(sdfs["pages"])
+    assert _udf_nodes(pages, "canonicalize_url_udf") == 1
+
+    frontier = pages.select(
+        "url_hash", "url", "host",
+        F.lit(0).alias("priority"), F.lit(0).alias("discovered_round"),
+        F.lit(0).alias("retry_count"),
+        F.lit(None).cast("timestamp").alias("next_fetch_ts"),
+    ).dropDuplicates(["url_hash"])
+    _, _, extracted = fetch_and_extract(
+        frontier, sdfs["hosts"], pages, datetime(2025, 7, 25, 1), 3
+    )
+    assert _udf_nodes(extracted, "extract_round_udf") == 1
+    # discovery's inferred non-empty-outlinks filter must not re-run it
+    admitted = discover_new(extracted, frontier.select("url_hash"))
+    assert _udf_nodes(admitted, "extract_round_udf") == 1
+
+    fetched = spark.createDataFrame(
+        [("https://h.example/a", 0, ["https://h.example/b"])],
+        "url string, priority int, outlinks array<string>",
+    )
+    seen = spark.createDataFrame([(0,)], "url_hash long")
+    assert "ArrowEvalPython" not in _plan(discover_new(fetched, seen))
+
+
+def test_anchor_stats_canonicalizes_once(spark):
+    import pandas as pd
+
+    from webscraper_spark.operators.anchors import _anchor_stats_plan
+
+    pages = spark.createDataFrame(
+        pd.DataFrame([("https://s.example/", '<a href="/t">x</a>')],
+                     columns=["url", "html"]),
+        "url string, html string",
+    )
+    _, base = _anchor_stats_plan(pages, "url", "html", 3)
+    try:
+        assert _udf_nodes(base, "canonicalize_href_udf") == 1
+    finally:
+        base.unpersist()

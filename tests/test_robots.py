@@ -4,7 +4,11 @@ from __future__ import annotations
 
 import urllib.robotparser
 
-from webscraper_spark.functions.robots import parse_robots, robots_allows
+from webscraper_spark.functions.robots import (
+    MAX_CRAWL_DELAY_MS,
+    parse_robots,
+    robots_allows,
+)
 
 BODY = """
 User-agent: *
@@ -45,6 +49,59 @@ def test_matches_stdlib_semantics():
                 body,
                 path,
             )
+
+
+def test_crawl_delay_out_of_range():
+    def delay(val):
+        return parse_robots(f"User-agent: *\nCrawl-delay: {val}\n")["crawl_delay_ms"]
+
+    # non-finite and negative delays are ignored like unparsable ones
+    for val in ("inf", "-inf", "1e400", "nan", "-1", "-0.5", "soon"):
+        assert delay(val) is None, val
+    # finite delays are capped at one day
+    for val in ("1e17", "1e306", "86401"):
+        assert delay(val) == MAX_CRAWL_DELAY_MS, val
+    assert delay("86400") == MAX_CRAWL_DELAY_MS == 86_400_000
+    assert delay("0") == 0
+    assert delay("2.5") == 2500
+    # an ignored value leaves an earlier valid one in place
+    body = "User-agent: *\nCrawl-delay: 3\nCrawl-delay: -1\n"
+    assert parse_robots(body)["crawl_delay_ms"] == 3000
+
+
+def test_crawl_delay_out_of_range_schedules(spark):
+    """The hosts' robots parse runs inside the schedule's Spark job: an
+    out-of-range delay must neither fail the task nor reorder a host's
+    fetches (host_seq and scheduled_ts increase together)."""
+    from datetime import datetime
+
+    from pyspark.sql import functions as F
+
+    from webscraper_spark.operators.schedule import schedule_round
+
+    t0 = datetime(2025, 7, 25, 1)
+    bodies = ["inf", "1e400", "1e17", "-1"]
+    hosts = spark.createDataFrame(
+        [(f"h{i}.example", f"User-agent: *\nCrawl-delay: {b}\n", 1000, t0)
+         for i, b in enumerate(bodies)],
+        "host string, robots_txt string, crawl_delay_ms long, next_allowed_ts timestamp",
+    )
+    frontier = spark.createDataFrame(
+        [(i * 10 + k, f"https://h{i}.example/p/{k}", f"h{i}.example", 0, 0, 0, None)
+         for i in range(len(bodies)) for k in range(3)],
+        "url_hash long, url string, host string, priority int, "
+        "discovered_round int, retry_count int, next_fetch_ts timestamp",
+    )
+    rows = schedule_round(frontier, hosts, 3, round_start_ts=t0).orderBy(
+        "host", "host_seq"
+    ).collect()
+    assert len(rows) == 3 * len(bodies)
+    delays = {r["host"]: r["delay_ms"] for r in rows}
+    assert delays == {"h0.example": 1000, "h1.example": 1000,
+                      "h2.example": MAX_CRAWL_DELAY_MS, "h3.example": 1000}
+    for a, b in zip(rows, rows[1:]):
+        if a["host"] == b["host"]:
+            assert b["scheduled_ts"] > a["scheduled_ts"]
 
 
 def test_empty_and_missing():

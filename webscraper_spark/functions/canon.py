@@ -109,9 +109,18 @@ def url_hash_py(canonical_url: str) -> int:
 
 # --- Spark-side (vectorized) ------------------------------------------------
 
+# Both UDFs are marked asNondeterministic: every caller filters
+# ``isNotNull`` on the result, and Catalyst would otherwise split that
+# filter from the projection — two ArrowEvalPython nodes, two kernel
+# evaluations per row. The kernel is pure; the mark only forbids Catalyst
+# from duplicating it.
+
 @F.pandas_udf(T.StringType())
 def canonicalize_url_udf(urls: pd.Series) -> pd.Series:
     return urls.map(lambda u: canonicalize_url(u) if u is not None else None)
+
+
+canonicalize_url_udf = canonicalize_url_udf.asNondeterministic()
 
 
 @F.pandas_udf(T.StringType())
@@ -121,6 +130,9 @@ def canonicalize_href_udf(href: pd.Series, base: pd.Series) -> pd.Series:
     return pd.Series(
         [canonicalize_url(h, base=b) for h, b in zip(href, base)], dtype=object
     )
+
+
+canonicalize_href_udf = canonicalize_href_udf.asNondeterministic()
 
 
 def with_canonical(df, url_col: str = "url"):

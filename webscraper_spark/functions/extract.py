@@ -29,7 +29,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..schemas import EXTRACTED
+from ..schemas import EXTRACTED, ROUND_EXTRACTED
+from .canon import canonicalize_url
 
 _SKIP_TAGS = {"script", "style", "noscript", "template"}
 _VOID_TAGS = {
@@ -293,8 +294,8 @@ def extract_text(html: bytes | str | None) -> str | None:
 
 
 def extract_outlinks(html: bytes | str | None) -> list[str]:
-    """Raw hrefs in document order (H5). Canonicalization/admission
-    filtering happens downstream on the exploded column."""
+    """Raw hrefs in document order (H5). The crawl round canonicalizes
+    them in the same pass (:func:`extract_round`)."""
     p = parse_page(html)
     return [] if p is None else p.hrefs
 
@@ -347,6 +348,26 @@ def extract_fields(html: bytes | str | None) -> dict:
         "rating": rating,
         "review_count": review_count,
         "engaged": engaged,
+    }
+
+
+def extract_round(html: bytes | str | None, url: str | None) -> dict:
+    """The crawl round's per-page kernel: ``title`` and ``text`` as in
+    :func:`extract_fields`, ``outlinks`` canonicalized against the page's
+    ``url`` (hrefs that canonicalize to None dropped, document order
+    kept) and ``n_outlinks``, the raw href count. Parsing and
+    canonicalization share one pass, so a page crosses into Python once.
+    A page that fails to parse yields all-null fields."""
+    p = parse_page(html)
+    if p is None:
+        return {"title": None, "text": None, "outlinks": None, "n_outlinks": None}
+    return {
+        "title": _normalize_ws("".join(p.title_chunks)) or None,
+        "text": _normalize_ws("".join(p.chunks)),
+        "outlinks": [
+            c for h in p.hrefs if (c := canonicalize_url(h, base=url)) is not None
+        ],
+        "n_outlinks": len(p.hrefs),
     }
 
 
@@ -540,6 +561,20 @@ def extract_benefits_udf(html: pd.Series) -> pd.DataFrame:
 def extract_udf(html: pd.Series) -> pd.DataFrame:
     rows = [extract_fields(h) for h in html]
     return pd.DataFrame(rows, columns=[f.name for f in EXTRACTED.fields])
+
+
+@F.pandas_udf(ROUND_EXTRACTED)
+def extract_round_udf(html: pd.Series, url: pd.Series) -> pd.DataFrame:
+    rows = [extract_round(h, u) for h, u in zip(html, url)]
+    return pd.DataFrame(rows, columns=[f.name for f in ROUND_EXTRACTED.fields])
+
+
+# asNondeterministic: a filter on a struct field, such as the non-empty
+# ``outlinks`` filter Catalyst infers for discover_new's explode, would
+# otherwise be pushed below the projection and evaluate the kernel a
+# second time whenever the extracted rows are not cached. The kernel is
+# pure; the mark only forbids duplicating it.
+extract_round_udf = extract_round_udf.asNondeterministic()
 
 
 @F.pandas_udf(T.StringType())

@@ -18,9 +18,15 @@ whole group.
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# Crawl-delay cap (one day): the scheduler computes host_seq × delay in
+# milliseconds, which must stay far inside timestamp_add's range.
+MAX_CRAWL_DELAY_MS = 86_400_000
 
 ROBOTS_RULES = T.StructType(
     [
@@ -55,9 +61,12 @@ def parse_robots(robots_txt: str | None) -> dict:
                 rules.append("+" + val)
         elif active and key == "crawl-delay":
             try:
-                crawl_delay_ms = int(float(val) * 1000)
+                delay_s = float(val)
             except ValueError:
-                pass
+                delay_s = math.nan
+            # unparsable, non-finite and negative delays are ignored
+            if 0 <= delay_s < math.inf:
+                crawl_delay_ms = int(min(delay_s * 1000, MAX_CRAWL_DELAY_MS))
     return {"rules": rules, "crawl_delay_ms": crawl_delay_ms}
 
 
@@ -79,15 +88,6 @@ def robots_allows(rules: dict | list | None, path: str) -> bool:
 def parse_robots_udf(bodies: pd.Series) -> pd.DataFrame:
     rows = [parse_robots(b) for b in bodies]
     return pd.DataFrame(rows, columns=["rules", "crawl_delay_ms"])
-
-
-@F.pandas_udf(T.BooleanType())
-def robots_allows_udf(paths: pd.Series, rules: pd.Series) -> pd.Series:
-    out = [
-        robots_allows(list(r) if r is not None else [], p)
-        for p, r in zip(paths, rules)
-    ]
-    return pd.Series(out)
 
 
 def robots_allows_col(path, rules):

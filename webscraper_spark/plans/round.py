@@ -6,13 +6,16 @@ Dataflow per round K::
 
     frontier ──schedule (robots + politeness window + budget)──▶ scheduled
     scheduled ⋈ pages (newest-wins)  ──▶ hits / misses
-    hits ──extract UDF──▶ fetched rows (text, title, fields)
-    hits ──explode(outlinks) ─canon─ dedupe ─anti-join seen──▶ new
+    hits ──extract kernel──▶ fetched rows (text, title, canonical outlinks)
+    fetched ──explode(outlinks) ─dedupe ─anti-join seen──▶ new
     commit: fetched+=K, seen+=new, frontier=next snapshot,
             hosts=advanced clocks, metrics+=per-shard lineage
 
 The first four lines are the lazy stages :func:`fetch_and_extract` and
 :func:`discover_new`, shared with the flagship ``crawl_round`` query.
+A page crosses into Python once: the extract kernel parses it and
+canonicalizes its hrefs against the page url in the same pass, so
+discovery is JVM-only.
 
 Every state change lands in one `TableStore.commit_round` — a crashed
 round K is invisible and idempotently re-runnable (C8 resume semantics;
@@ -38,8 +41,8 @@ from datetime import datetime, timedelta
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.canon import canonicalize_href_udf, with_canonical
-from ..functions.extract import extract_udf
+from ..functions.canon import with_canonical
+from ..functions.extract import extract_round_udf
 from ..operators.dedup import anti_join_seen, dedup_latest
 from ..operators.hoststats import throttle_admission
 from ..operators.schedule import advance_host_clocks, schedule_round
@@ -103,9 +106,10 @@ def fetch_and_extract(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Schedule, fetch and extract one round. Returns ``(scheduled,
     misses, extracted)``: the politeness schedule, the scheduled rows
-    with no page to fetch, and the fetched pages' extracted fields
-    (plus ``host_seq``, ``scheduled_ts``, ``priority`` and the page's
-    ``__html_len``). Lazy: nothing is persisted, the caller decides."""
+    with no page to fetch, and the fetched pages' title, text, canonical
+    ``outlinks`` and raw href count ``n_outlinks`` (plus ``host_seq``,
+    ``scheduled_ts``, ``priority`` and the page's ``__html_len``). Lazy:
+    nothing is persisted, the caller decides."""
     # 1. politeness scheduling (robots + ranking window + budget)
     scheduled = schedule_round(
         frontier, hosts, per_host_budget, round_start_ts=start_ts, n_salt=n_salt
@@ -133,13 +137,14 @@ def fetch_and_extract(
     hits = fetched_join.filter(F.col("html").isNotNull())
     misses = fetched_join.filter(F.col("html").isNull())
 
-    # 3. extraction (one Arrow batch at a time)
-    extracted = hits.withColumn("ex", extract_udf("html")).select(
+    # 3. extraction + outlink canonicalization (one Arrow batch at a time)
+    extracted = hits.withColumn("ex", extract_round_udf("html", "url")).select(
         "url_hash", "url", "host", "host_seq", "scheduled_ts", "warc_ts",
         F.col("lang"),
         F.col("ex.title").alias("title"),
         F.col("ex.text").alias("text"),
         F.col("ex.outlinks").alias("outlinks"),
+        F.col("ex.n_outlinks").alias("n_outlinks"),
         F.length(F.col("html")).alias("__html_len"),
         F.col("priority"),
     )
@@ -147,20 +152,13 @@ def fetch_and_extract(
 
 
 def discover_new(extracted: DataFrame, seen_keys: DataFrame) -> DataFrame:
-    """Outlink discovery: explode ``extracted.outlinks`` → canonicalize
-    against the source url → one row per url carrying its sources' min
-    priority (``__pprio``) → anti-join on ``url_hash`` against
-    ``seen_keys``. Returns ``url, __pprio, host, url_hash``. Lazy."""
-    links = (
-        extracted.select(
-            F.col("url").alias("src_url"),
-            F.col("priority").alias("src_priority"),
-            F.explode_outer("outlinks").alias("href"),
-        )
-        .filter(F.col("href").isNotNull())
-        .withColumn("__canon", canonicalize_href_udf(F.col("href"), F.col("src_url")))
-        .filter(F.col("__canon").isNotNull())
-        .select(F.col("__canon").alias("url"), "src_priority")
+    """Outlink discovery: explode the canonical ``extracted.outlinks`` →
+    one row per url carrying its sources' min priority (``__pprio``) →
+    anti-join on ``url_hash`` against ``seen_keys``. Returns ``url,
+    __pprio, host, url_hash``. Lazy."""
+    links = extracted.select(
+        F.explode("outlinks").alias("url"),
+        F.col("priority").alias("src_priority"),
     )
     candidates = (
         links.groupBy("url")
@@ -314,7 +312,7 @@ def run_round(
         F.lit(round_no).alias("round"),
         F.col("host_seq").cast("int"),
         "scheduled_ts", "warc_ts", "text", "title", "lang",
-        F.size("outlinks").alias("n_outlinks"),
+        "n_outlinks",
         F.lit("ok").alias("fetch_status"),
     ).unionByName(
         misses.select(

@@ -151,4 +151,16 @@ EXTRACTED = T.StructType(
     ]
 )
 
+# Struct returned by the crawl round's fused kernel (functions/extract.py):
+# canonical outlinks, and the raw href count that ``fetched.n_outlinks``
+# records.
+ROUND_EXTRACTED = T.StructType(
+    [
+        T.StructField("title", T.StringType(), True),
+        T.StructField("text", T.StringType(), True),
+        T.StructField("outlinks", T.ArrayType(T.StringType()), True),
+        T.StructField("n_outlinks", T.IntegerType(), True),
+    ]
+)
+
 # (The robots-rules struct lives in functions/robots.py next to its parser.)
