@@ -175,7 +175,7 @@ def _crawl_round(spark: SparkSession, sf_dir: str, budget: int = 3) -> DataFrame
     Non-SQL-expressible (stateful scheduling + Python-kernel extraction):
     rows-only check."""
     pages, frontier, hosts = _derived_corpus(spark, sf_dir)
-    _, _, extracted = fetch_and_extract(frontier, hosts, pages, ROUND_START, budget)
+    _, fetched = fetch_and_extract(frontier, hosts, pages, ROUND_START, budget)
     # materialize the round's fetched+extracted rows ONCE (budget×hosts
     # rows — tiny by construction): both the output branch and the
     # discovery-totals branch consume `extracted`, and without the cut
@@ -184,7 +184,7 @@ def _crawl_round(spark: SparkSession, sf_dir: str, budget: int = 3) -> DataFrame
     # production this materialization is the round's `fetched` delta
     # write, so the cut mirrors the real pipeline. Fresh per invocation —
     # nothing persists across bench runs.
-    extracted = extracted.localCheckpoint(eager=True)
+    extracted = fetched.filter(F.col("__hit")).localCheckpoint(eager=True)
     new_urls = discover_new(extracted, frontier.select("url_hash"))
     # discovery total rides as an aggregated broadcast column so the whole
     # round is ONE job (no driver-side count action)

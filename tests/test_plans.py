@@ -75,12 +75,13 @@ def test_round_kernels_evaluate_once_per_row(spark, sdfs):
         F.lit(0).alias("retry_count"),
         F.lit(None).cast("timestamp").alias("next_fetch_ts"),
     ).dropDuplicates(["url_hash"])
-    _, _, extracted = fetch_and_extract(
+    _, fetched = fetch_and_extract(
         frontier, sdfs["hosts"], pages, datetime(2025, 7, 25, 1), 3
     )
-    assert _udf_nodes(extracted, "extract_round_udf") == 1
+    assert _udf_nodes(fetched, "extract_round_udf") == 1
+    assert "html" not in fetched.columns
     # discovery's inferred non-empty-outlinks filter must not re-run it
-    admitted = discover_new(extracted, frontier.select("url_hash"))
+    admitted = discover_new(fetched.filter("__hit"), frontier.select("url_hash"))
     assert _udf_nodes(admitted, "extract_round_udf") == 1
 
     fetched = spark.createDataFrame(
@@ -89,6 +90,23 @@ def test_round_kernels_evaluate_once_per_row(spark, sdfs):
     )
     seen = spark.createDataFrame([(0,)], "url_hash long")
     assert "ArrowEvalPython" not in _plan(discover_new(fetched, seen))
+
+
+def test_schedule_over_init_snapshot_runs_no_python(spark, sdfs, tmp_path):
+    """``init_crawl`` stores the parsed robots rules with the hosts, so
+    scheduling a round over its snapshot never crosses into Python."""
+    from webscraper_spark.operators.schedule import schedule_round
+    from webscraper_spark.plans.round import init_crawl, round_clock
+    from webscraper_spark.sources.tables import TableStore
+
+    store = TableStore(spark, str(tmp_path / "store"))
+    init_crawl(store, sdfs["seeds"], sdfs["hosts"])
+    scheduled = schedule_round(
+        store.read_snapshot("frontier", up_to=0),
+        store.read_snapshot("hosts", up_to=0),
+        per_host_budget=4, round_start_ts=round_clock(1),
+    )
+    assert "ArrowEvalPython" not in _plan(scheduled)
 
 
 def test_anchor_stats_canonicalizes_once(spark):

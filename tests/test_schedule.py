@@ -7,7 +7,9 @@ from datetime import datetime
 from pyspark.sql import functions as F
 
 from webscraper_spark.functions.canon import with_canonical
-from webscraper_spark.operators.schedule import advance_host_clocks, schedule_round
+from webscraper_spark.operators.schedule import (
+    advance_host_clocks, schedule_round, with_robots_rules,
+)
 from webscraper_spark.operators.topk import topk_per_group
 
 T0 = datetime(2025, 7, 25, 1, 0, 0)
@@ -107,3 +109,34 @@ def test_advance_host_clocks(spark, sdfs):
             assert (ts - base).total_seconds() * 1000 == n * d
         else:
             assert ts == before[host]
+
+
+def _rows(df):
+    cols = sorted(df.columns)
+    return sorted(map(tuple, df.select(*cols).collect()))
+
+
+def test_store_without_parsed_robots_resumes_identically(spark, sdfs, tmp_path):
+    """A store whose round-0 hosts snapshot has no parsed robots columns
+    (how stores were written before ``init_crawl`` stored them) resumes,
+    parsing on read, and commits the same rows as a fresh store; the
+    fresh store's round-K snapshot still carries the parsed columns."""
+    from webscraper_spark.plans.round import init_crawl, run_crawl
+    from webscraper_spark.sources.tables import TableStore
+
+    fresh = TableStore(spark, str(tmp_path / "fresh"))
+    old = TableStore(spark, str(tmp_path / "old"))
+    init_crawl(old, sdfs["seeds"], sdfs["hosts"])
+    old.write("hosts", sdfs["hosts"], 0)
+    assert "robots_rules" not in old.read_snapshot("hosts", up_to=0).columns
+    for store in (fresh, old):
+        run_crawl(store, sdfs["pages"], sdfs["seeds"], sdfs["hosts"],
+                  n_rounds=2, per_host_budget=4)
+    for name, reader in (("fetched", "read_delta"), ("frontier", "read_snapshot")):
+        assert _rows(getattr(fresh, reader)(name)) == _rows(getattr(old, reader)(name)), name
+
+    hosts = fresh.read_snapshot("hosts", up_to=2)
+    parsed = ["host", "robots_rules", "robots_delay_ms"]
+    assert _rows(hosts.select(*parsed)) == _rows(
+        with_robots_rules(sdfs["hosts"]).select(*parsed)
+    )

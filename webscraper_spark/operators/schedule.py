@@ -13,10 +13,11 @@ The engine replaces wall-clock sleeps with *logical* politeness clocks:
 
 which is exactly a min-heap-by-next-allowed-time priority queue, expressed
 as a window so Spark executes it as a shuffle + sort instead of a loop.
-Robots rules (C5) gate admission before ranking; per-host clocks advance
-by ``admitted_count * crawl_delay`` at commit, so consecutive scheduled
-fetches on one host are always ≥ crawl_delay apart — across rounds too
-(property-tested politeness invariant, SURVEY §5.2.4).
+Robots rules (C5), parsed once into the hosts snapshot, gate admission
+before ranking; per-host clocks advance by ``admitted_count *
+crawl_delay`` at commit, so consecutive scheduled fetches on one host are
+always ≥ crawl_delay apart — across rounds too (property-tested
+politeness invariant, SURVEY §5.2.4).
 
 Skew: the budget filter compiles to Catalyst's WindowGroupLimit (map-side
 per-host top-k before the shuffle), so a Zipf-head host cannot serialize
@@ -35,16 +36,34 @@ from .topk import topk_per_group
 DEFAULT_DELAY_MS = 2000
 
 
-def hosts_with_rules(hosts: DataFrame) -> DataFrame:
-    """Parse robots once per host (vectorized); effective crawl delay =
-    robots Crawl-delay if present else the host's configured delay."""
+def with_robots_rules(hosts: DataFrame) -> DataFrame:
+    """``hosts`` plus its parsed robots.txt: ``robots_rules`` (the ``*``
+    group's ordered ``+``/``-`` prefixes) and ``robots_delay_ms`` (its
+    Crawl-delay, null when absent). The one Python pass over robots
+    bodies: ``init_crawl`` stores the result in the hosts snapshot and
+    every later snapshot carries it forward, so a frame that already has
+    the columns is returned as is."""
+    if "robots_rules" in hosts.columns:
+        return hosts
     parsed = hosts.withColumn("__rules", parse_robots_udf(F.col("robots_txt")))
     return parsed.select(
+        *hosts.columns,
+        F.col("__rules.rules").alias("robots_rules"),
+        F.col("__rules.crawl_delay_ms").alias("robots_delay_ms"),
+    )
+
+
+def hosts_with_rules(hosts: DataFrame) -> DataFrame:
+    """Per host: robots rules and the effective crawl delay (robots
+    Crawl-delay if present else the host's configured delay). Uses the
+    snapshot's parsed columns; a frame without them (a raw hosts table,
+    or a store written before they existed) is parsed on read."""
+    return with_robots_rules(hosts).select(
         "host",
         "next_allowed_ts",
-        F.col("__rules.rules").alias("robots_rules"),
+        "robots_rules",
         F.coalesce(
-            F.col("__rules.crawl_delay_ms"),
+            F.col("robots_delay_ms"),
             F.col("crawl_delay_ms"),
             F.lit(DEFAULT_DELAY_MS),
         ).alias("delay_ms"),
@@ -128,7 +147,9 @@ def advance_host_clocks(
     hosts: DataFrame, scheduled: DataFrame, round_start_ts=None
 ) -> DataFrame:
     """Post-round host-clock update: next_allowed_ts advances past the last
-    scheduled fetch + one delay (the politeness gap carries across rounds)."""
+    scheduled fetch + one delay (the politeness gap carries across rounds).
+    Every other hosts column, the parsed robots ones included, carries
+    forward unchanged."""
     per_host = scheduled.groupBy("host").agg(
         F.count("*").alias("__n"), F.max("delay_ms").alias("__delay")
     )

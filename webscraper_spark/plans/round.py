@@ -1,21 +1,26 @@
 """The crawl round (EP2's discover + fetch+extract stages fused; SURVEY
-§3, §7.1 step 6). A round runs 27 Spark jobs, as crawlbench's traced
-run counts them.
+§3, §7.1 step 6). A ``round_bulk`` round runs 21 Spark jobs, as
+crawlbench's traced run counts them (``tools/layer_profile.py --round`` lists
+them).
 
 Dataflow per round K::
 
-    frontier ──schedule (robots + politeness window + budget)──▶ scheduled
-    scheduled ⋈ pages (newest-wins)  ──▶ hits / misses
-    hits ──extract kernel──▶ fetched rows (text, title, canonical outlinks)
-    fetched ──explode(outlinks) ─dedupe ─anti-join seen──▶ new
-    commit: fetched+=K, seen+=new, frontier=next snapshot,
-            hosts=advanced clocks, metrics+=per-shard lineage
+    frontier ⋈ hosts (robots parsed at init) ──schedule──▶ scheduled
+    scheduled ⟕ pages (newest-wins) ──extract kernel──▶ fetched
+        (every scheduled row once: text, title, canonical outlinks,
+         __hit; html dropped after the kernel)
+    fetched[__hit] ──explode(outlinks) ─dedupe ─anti-join seen──▶ new
+    writes: fetched first (fills the scheduled + fetched caches), then
+            seen+=new, frontier=next snapshot, hosts=advanced clocks
+            (+ seen_deletes) as concurrent jobs; metrics = one
+            per-shard aggregate collected to the driver
+    commit: the manifest names round K
 
-The first four lines are the lazy stages :func:`fetch_and_extract` and
+The first three lines are the lazy stages :func:`fetch_and_extract` and
 :func:`discover_new`, shared with the flagship ``crawl_round`` query.
 A page crosses into Python once: the extract kernel parses it and
 canonicalizes its hrefs against the page url in the same pass, so
-discovery is JVM-only.
+discovery is JVM-only; robots.txt is parsed once, by ``init_crawl``.
 
 Every state change lands in one `TableStore.commit_round` — a crashed
 round K is invisible and idempotently re-runnable (C8 resume semantics;
@@ -28,7 +33,8 @@ guards it against hash collisions) — at cluster scale both sides
 bucketed by url_hash so this is co-partitioned, (c) the
 exact seen anti-join on url_hash — at cluster scale the seen table is
 bucketed by url_hash, so only the candidates shuffle
-(``tests/test_bucketing.py``) — and (d) one groupBy for metrics.
+(``tests/test_bucketing.py``) — and (d) one groupBy for metrics, whose
+at most ``N_METRIC_SHARDS`` rows are the round's only driver collect.
 ``pages.html`` is only read behind the scheduled-join (column pruning
 keeps it out of every other scan).
 """
@@ -36,8 +42,11 @@ keeps it out of every other scan).
 from __future__ import annotations
 
 import time as _time
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timedelta
 
+import pandas as pd
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -45,14 +54,17 @@ from ..functions.canon import with_canonical
 from ..functions.extract import extract_round_udf
 from ..operators.dedup import anti_join_seen, dedup_latest
 from ..operators.hoststats import throttle_admission
-from ..operators.schedule import advance_host_clocks, schedule_round
-from ..schemas import FETCHED, FRONTIER, SEEN
+from ..operators.schedule import (
+    advance_host_clocks, schedule_round, with_robots_rules,
+)
+from ..schemas import FRONTIER, METRICS
 from ..sources.tables import TableStore
 
 BASE_ROUND_EPOCH = datetime(2025, 7, 25, 0, 0, 0)
 ROUND_INTERVAL = timedelta(hours=1)
 RETRY_BACKOFF = timedelta(minutes=30)
 N_METRIC_SHARDS = 32
+METRIC_COUNTS = ("scheduled", "fetched", "missed", "new_urls", "bytes_html")
 
 
 def round_clock(round_no: int) -> datetime:
@@ -67,10 +79,10 @@ def prepare_pages(pages: DataFrame) -> DataFrame:
     at cluster scale this is the materialized, url_hash-bucketed form of
     the raw WARC-derived table.
 
-    The result is hash-partitioned on ``url_hash`` so every round's fetch
-    join is map-side on the pages side: the html payload (by far the
-    widest column) never crosses a shuffle again — only the (narrow)
-    scheduled frontier shuffles to meet it."""
+    The result is hash-partitioned on ``url_hash``, but no round's fetch
+    join uses that partitioning yet: under the session's 64 MiB
+    broadcast threshold Spark broadcasts the whole cached table, html
+    included, to the join every round."""
     canon = with_canonical(pages)
     deduped = dedup_latest(canon, ["url_hash"], "warc_ts")
     return deduped.repartition("url_hash")
@@ -80,7 +92,9 @@ def init_crawl(
     store: TableStore, seeds: DataFrame, hosts: DataFrame
 ) -> None:
     """Round 0: canonicalized seeds become the frontier AND the initial
-    seen membership (a seed is by definition discovered)."""
+    seen membership (a seed is by definition discovered). The hosts
+    snapshot stores each host's parsed robots rules, so rounds schedule
+    without a Python pass."""
     f = (
         with_canonical(seeds)
         .dropDuplicates(["url_hash"])
@@ -96,28 +110,29 @@ def init_crawl(
     )
     store.write("frontier", f, 0)
     store.write("seen", f.select("url_hash", "url", "host", "discovered_round"), 0)
-    store.write("hosts", hosts, 0)
+    store.write("hosts", with_robots_rules(hosts), 0)
     store.commit_round(0, lineage={"seeds": f.count()})
 
 
 def fetch_and_extract(
     frontier: DataFrame, hosts: DataFrame, pages_latest: DataFrame,
     start_ts: datetime, per_host_budget: int, n_salt: int = 1,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame]:
     """Schedule, fetch and extract one round. Returns ``(scheduled,
-    misses, extracted)``: the politeness schedule, the scheduled rows
-    with no page to fetch, and the fetched pages' title, text, canonical
-    ``outlinks`` and raw href count ``n_outlinks`` (plus ``host_seq``,
-    ``scheduled_ts``, ``priority`` and the page's ``__html_len``). Lazy:
-    nothing is persisted, the caller decides."""
+    fetched)``: the politeness schedule, and every scheduled row joined
+    once to its page and run once through the extract kernel. ``fetched``
+    carries the schedule's columns, the page's ``warc_ts``, ``lang`` and
+    ``__html_len``, the kernel's ``title``, ``text``, canonical
+    ``outlinks`` and raw href count ``n_outlinks``, and ``__hit``; html
+    stops at the kernel. A miss (no page, a null page, or a url_hash
+    collision) has ``__hit`` false and null page and kernel columns.
+    Lazy: nothing is persisted, the caller decides."""
     # 1. politeness scheduling (robots + ranking window + budget)
     scheduled = schedule_round(
         frontier, hosts, per_host_budget, round_start_ts=start_ts, n_salt=n_salt
     )
 
-    # 2. "fetch" = equi-join against the pages table on url_hash ALONE so
-    # the join co-partitions with pages_latest's url_hash partitioning
-    # (html never re-shuffles; only the narrow scheduled side moves).
+    # 2. "fetch" = equi-join against the pages table on url_hash ALONE.
     # pages_latest is unique per url_hash (newest-wins dedup), so the join
     # yields at most one match; the post-join url equality demotes 64-bit
     # hash collisions (possible at 10^10 keys) to misses instead of
@@ -126,37 +141,33 @@ def fetch_and_extract(
         F.col("url_hash"), F.col("url").alias("__page_url"),
         F.col("warc_ts"), F.col("html"), F.col("lang"),
     )
-    fetched_join = (
-        scheduled.join(page_cols, on="url_hash", how="left")
-        .withColumn(
-            "html",
-            F.when(F.col("__page_url") == F.col("url"), F.col("html")),
-        )
-        .drop("__page_url")
+    joined = scheduled.join(page_cols, on="url_hash", how="left").withColumn(
+        "html", F.when(F.col("__page_url") == F.col("url"), F.col("html"))
     )
-    hits = fetched_join.filter(F.col("html").isNotNull())
-    misses = fetched_join.filter(F.col("html").isNull())
+    hit = F.col("html").isNotNull()
 
-    # 3. extraction + outlink canonicalization (one Arrow batch at a time)
-    extracted = hits.withColumn("ex", extract_round_udf("html", "url")).select(
-        "url_hash", "url", "host", "host_seq", "scheduled_ts", "warc_ts",
-        F.col("lang"),
+    # 3. extraction + outlink canonicalization (one Arrow batch at a time);
+    # a miss reaches the kernel with null html and gets null fields back
+    fetched = joined.withColumn("ex", extract_round_udf("html", "url")).select(
+        *scheduled.columns,
+        F.when(hit, F.col("warc_ts")).alias("warc_ts"),
+        F.when(hit, F.col("lang")).alias("lang"),
         F.col("ex.title").alias("title"),
         F.col("ex.text").alias("text"),
         F.col("ex.outlinks").alias("outlinks"),
         F.col("ex.n_outlinks").alias("n_outlinks"),
         F.length(F.col("html")).alias("__html_len"),
-        F.col("priority"),
+        hit.alias("__hit"),
     )
-    return scheduled, misses, extracted
+    return scheduled, fetched
 
 
-def discover_new(extracted: DataFrame, seen_keys: DataFrame) -> DataFrame:
-    """Outlink discovery: explode the canonical ``extracted.outlinks`` →
+def discover_new(fetched: DataFrame, seen_keys: DataFrame) -> DataFrame:
+    """Outlink discovery: explode the canonical ``fetched.outlinks`` →
     one row per url carrying its sources' min priority (``__pprio``) →
     anti-join on ``url_hash`` against ``seen_keys``. Returns ``url,
     __pprio, host, url_hash``. Lazy."""
-    links = extracted.select(
+    links = fetched.select(
         F.explode("outlinks").alias("url"),
         F.col("priority").alias("src_priority"),
     )
@@ -252,15 +263,15 @@ def run_round(
 
     start_ts = round_clock(round_no)
 
-    # 1-3. schedule → fetch → extract, cached for their several consumers
-    # (misses carry no html — tiny; caching them avoids re-running the
-    # fetch join for the retry/metrics/write consumers)
-    scheduled, misses, extracted = (
+    # 1-3. schedule → fetch → extract, cached for their several consumers;
+    # hits and misses are filters of the one cached fetched frame
+    scheduled, fetched = (
         df.persist()
         for df in fetch_and_extract(
             frontier, hosts, pages_latest, start_ts, per_host_budget, n_salt
         )
     )
+    hit = F.col("__hit")
 
     # 4. outlink discovery against the admission membership = effective
     # seen (post-deletions) plus this round's recrawl keys (they are
@@ -268,7 +279,7 @@ def run_round(
     seen_admit = seen_eff.select("url_hash")
     if recrawl_rows is not None:
         seen_admit = seen_admit.unionByName(recrawl_rows.select("url_hash"))
-    admitted = discover_new(extracted, seen_admit)
+    admitted = discover_new(fetched.filter(hit), seen_admit)
     if host_reputation is not None:
         # host-reputation gate on admission: candidates from duplicate-
         # farm / junk hosts never enter the frontier, low-English hosts
@@ -289,8 +300,7 @@ def run_round(
 
     # 5. next frontier: remove completed fetches, back off misses, admit new
     retried = (  # misses beyond max_retries simply fall out of the frontier
-
-        misses.filter(F.col("retry_count") < max_retries)
+        fetched.filter(~hit & (F.col("retry_count") < max_retries))
         .select(
             "url_hash", "url", "host", "priority", "discovered_round",
             (F.col("retry_count") + 1).alias("retry_count"),
@@ -307,117 +317,89 @@ def run_round(
     )
 
     # 6. fetched rows (per FETCHED schema)
-    fetched_rows = extracted.select(
+    fetched_rows = fetched.select(
         "url_hash", "url", "host",
         F.lit(round_no).alias("round"),
         F.col("host_seq").cast("int"),
-        "scheduled_ts", "warc_ts", "text", "title", "lang",
-        "n_outlinks",
-        F.lit("ok").alias("fetch_status"),
-    ).unionByName(
-        misses.select(
-            "url_hash", "url", "host",
-            F.lit(round_no).alias("round"),
-            F.col("host_seq").cast("int"),
-            "scheduled_ts",
-            F.lit(None).cast("timestamp").alias("warc_ts"),
-            F.lit(None).cast("string").alias("text"),
-            F.lit(None).cast("string").alias("title"),
-            F.lit(None).cast("string").alias("lang"),
-            F.lit(None).cast("int").alias("n_outlinks"),
-            F.lit("miss").alias("fetch_status"),
-        )
+        "scheduled_ts", "warc_ts", "text", "title", "lang", "n_outlinks",
+        F.when(hit, "ok").otherwise("miss").alias("fetch_status"),
     )
-
-    # 7. per-shard lineage metrics (C9): shard = pmod(xxhash64(host), N)
-    shard = F.pmod(F.xxhash64("host"), F.lit(N_METRIC_SHARDS)).cast("int")
-    metrics = (
-        fetched_rows.withColumn("shard", shard)
-        .groupBy("shard")
-        .agg(
-            F.count("*").alias("scheduled"),
-            F.sum(F.when(F.col("fetch_status") == "ok", 1).otherwise(0)).alias("fetched"),
-            F.sum(F.when(F.col("fetch_status") == "miss", 1).otherwise(0)).alias("missed"),
-        )
-        .withColumn("round", F.lit(round_no))
-    )
-    new_per_shard = (
-        new_urls.withColumn("shard", shard)
-        .groupBy("shard")
-        .agg(F.count("*").alias("new_urls"))
-    )
-    html_per_shard = (
-        extracted.withColumn("shard", shard)
-        .groupBy("shard")
-        .agg(F.sum("__html_len").alias("bytes_html"))
-    )
-    metrics = (
-        metrics.join(new_per_shard, on="shard", how="full")
-        .join(html_per_shard, on="shard", how="full")
-        .select(
-            F.coalesce("round", F.lit(round_no)).alias("round"),
-            F.coalesce("shard", F.lit(-1)).alias("shard"),
-            F.coalesce("scheduled", F.lit(0)).alias("scheduled"),
-            F.coalesce("fetched", F.lit(0)).alias("fetched"),
-            F.coalesce("missed", F.lit(0)).alias("missed"),
-            F.coalesce("new_urls", F.lit(0)).alias("new_urls"),
-            F.coalesce("bytes_html", F.lit(0)).alias("bytes_html"),
-        )
-    )
-
-    # 8. durable writes, then the atomic commit
-    metrics = metrics.persist()
-    new_hosts = advance_host_clocks(hosts, scheduled, round_start_ts=start_ts)
-    store.write("fetched", fetched_rows, round_no)
     seen_add = new_urls.select("url_hash", "url", "host", "discovered_round")
+    writes = []
     if recrawl_rows is not None:
         seen_add = seen_add.unionByName(
             recrawl_rows.select("url_hash", "url", "host", "discovered_round")
         )
-        store.write(
-            "seen_deletes",
-            recrawl_rows.select(
-                "url_hash", F.lit(round_no).alias("deleted_round")
-            ),
-            round_no,
-        )
-    store.write("seen", seen_add, round_no)
-    store.write("frontier", next_frontier, round_no)
-    store.write("hosts", new_hosts, round_no)
+        writes.append(("seen_deletes", recrawl_rows.select(
+            "url_hash", F.lit(round_no).alias("deleted_round")
+        )))
+    writes += [
+        ("seen", seen_add),
+        ("frontier", next_frontier),
+        ("hosts", advance_host_clocks(hosts, scheduled, round_start_ts=start_ts)),
+    ]
+
+    # 7. durable writes, then the atomic commit. `fetched` goes first: its
+    # job fills the scheduled and fetched caches, which every other write
+    # reads. The rest read none of each other's output, so they run as
+    # concurrent jobs; the commit waits for all of them, and any failure
+    # propagates with the round left uncommitted.
+    store.write("fetched", fetched_rows, round_no)
+    # one wrapper per write: each hands its thread its own copy of the
+    # caller's local properties (job group, tags); writes sharing a copy
+    # would overwrite each other's SQL execution id in it
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        for done in [
+            pool.submit(inheritable_thread_target(store.spark)(store.write),
+                        name, df, round_no)
+            for name, df in writes
+        ]:
+            done.result()
+
+    # 8. per-shard lineage metrics (C9): shard = pmod(xxhash64(host), N),
+    # one aggregate over the cached fetched rows tagged with this round's
+    # admissions; at most N_METRIC_SHARDS rows reach the driver
+    shard = F.pmod(F.xxhash64("host"), F.lit(N_METRIC_SHARDS)).cast("int")
+
+    def counts(df, **cols):
+        return df.select(shard.alias("shard"), *[
+            cols.get(c, F.lit(0)).alias(c) for c in METRIC_COUNTS
+        ])
+
+    tagged = counts(
+        fetched, scheduled=F.lit(1), fetched=hit.cast("int"),
+        missed=(~hit).cast("int"), bytes_html=F.coalesce("__html_len", F.lit(0)),
+    ).unionByName(counts(new_urls, new_urls=F.lit(1)))
+    per_shard = sorted(
+        tagged.groupBy("shard")
+        .agg(*[F.sum(c).alias(c) for c in METRIC_COUNTS])
+        .collect()
+    )
+    lineage = {
+        c: sum(r[c] for r in per_shard)
+        for c in ("scheduled", "fetched", "missed", "new_urls")
+    }
     # Real per-round wall time (C9/A5): measured on the driver AFTER the
     # heavy writes have executed, stamped as a literal into the metrics
     # write. Determinism-safe — it never feeds query output or any table
     # the resume-parity invariant covers; the reference's running-avg/ETA
     # (Glassdoor_url_finder.py:311-327) derives from exactly this value.
     elapsed_sec = round(_time.monotonic() - t_round0, 3)
-    store.write(
-        "metrics", metrics.withColumn("elapsed_sec", F.lit(elapsed_sec)), round_no
+    lineage["elapsed_sec"] = elapsed_sec
+    # a pandas frame goes to the JVM as one Arrow batch: one local-scan job
+    metrics = pd.DataFrame(
+        [(round_no, *r, elapsed_sec) for r in per_shard],
+        columns=METRICS.fieldNames(),
     )
+    store.write("metrics", store.spark.createDataFrame(metrics, METRICS), round_no)
 
-    # lineage = one aggregation over the (persisted) metrics table instead
-    # of four separate count() jobs
-    agg = metrics.agg(
-        F.sum("scheduled").alias("s"), F.sum("fetched").alias("f"),
-        F.sum("missed").alias("m"), F.sum("new_urls").alias("n"),
-    ).first()
-    lineage = {
-        "scheduled": int(agg["s"] or 0),
-        "fetched": int(agg["f"] or 0),
-        "missed": int(agg["m"] or 0),
-        "new_urls": int(agg["n"] or 0),
-        "elapsed_sec": elapsed_sec,
-    }
     if recrawl_rows is not None:
         lineage["recrawled"] = recrawl_rows.count()
     _merge_extra_lineage(lineage, extra_lineage)
     store.commit_round(round_no, lineage=lineage)
-    scheduled.unpersist()
-    extracted.unpersist()
-    new_urls.unpersist()
-    misses.unpersist()
-    metrics.unpersist()
-    if recrawl_rows is not None:
-        recrawl_rows.unpersist()
+    for df in (scheduled, fetched, new_urls, recrawl_rows):
+        if df is not None:
+            df.unpersist()
     return lineage
 
 

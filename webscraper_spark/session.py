@@ -51,8 +51,9 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # runtime Bloom join filters (SURVEY §4): prune the seen-table
-        # probe side of frontier⋈seen style joins at execution time
+        # runtime Bloom join filters (SURVEY §4) for inner and semi joins
+        # with a selective side; Spark 4.1 builds none for the round's
+        # left_anti seen probe, and this setting has no A/B yet
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
